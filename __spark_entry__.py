@@ -79,18 +79,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from fsql_spark.fsql_catalog import FSQL_QUERIES
 
     out.update(FSQL_QUERIES)
-    try:  # extension operators land incrementally; never break the contract
-        from fsql_spark.operators import EXTENSION_QUERIES
+    from fsql_spark.operators import EXTENSION_QUERIES
 
-        out.update(EXTENSION_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from fsql_spark.streaming import STREAMING_QUERIES
+    out.update(EXTENSION_QUERIES)
+    from fsql_spark.streaming import STREAMING_QUERIES
 
-        out.update(STREAMING_QUERIES)
-    except ImportError:
-        pass
+    out.update(STREAMING_QUERIES)
     # The driver correctness harness checks only the FIRST 50 registry
     # entries per round. With >50 registered queries a fixed order starves
     # the tail forever, so rotate (see _rotation_order): at most
@@ -140,16 +134,10 @@ def oracle_sql() -> dict[str, str]:
     from fsql_spark.fsql_catalog import FSQL_ORACLES
 
     out.update(FSQL_ORACLES)
-    try:
-        from fsql_spark.operators import EXTENSION_ORACLES
+    from fsql_spark.operators import EXTENSION_ORACLES
 
-        out.update(EXTENSION_ORACLES)
-    except ImportError:
-        pass
-    try:
-        from fsql_spark.streaming import STREAMING_ORACLES
+    out.update(EXTENSION_ORACLES)
+    from fsql_spark.streaming import STREAMING_ORACLES
 
-        out.update(STREAMING_ORACLES)
-    except ImportError:
-        pass
+    out.update(STREAMING_ORACLES)
     return out

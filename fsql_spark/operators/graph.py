@@ -46,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import pinned, temp_conf
+
 
 class DanglingNodesError(ValueError):
     """The edge list has sinks (out-degree 0) — PageRank mass would leak."""
@@ -324,16 +326,12 @@ def order_graph_tables_cached(
 def _q_graph_pagerank_frame(
     spark: SparkSession,
     sf: str,
-    edges: DataFrame | None = None,
-    tables: tuple[DataFrame, DataFrame] | None = None,
-    prevalidated_n: int | None = None,
-    copartitioned: bool = False,
+    tables: tuple[DataFrame, DataFrame],
+    prevalidated_n: int,
 ) -> DataFrame:
-    if edges is None and tables is None:
-        edges = order_graph_edges(spark, sf)
     ranks, n = pagerank(
-        edges, iterations=_PR_ITERATIONS, damping=_PR_DAMPING, tables=tables,
-        prevalidated_n=prevalidated_n, copartitioned=copartitioned,
+        None, iterations=_PR_ITERATIONS, damping=_PR_DAMPING, tables=tables,
+        prevalidated_n=prevalidated_n, copartitioned=True,
     )
     supplier = spark.read.parquet(f"{sf}/supplier.parquet").select("s_suppkey", "s_name")
     return (
@@ -355,8 +353,7 @@ def q_graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     The K unrolled rounds reference the edge table K+1 times in one plan,
     so it is persisted for the call and the node-sized result materialized
     driver-side so the cache can be RELEASED per call — the
-    q_source_js_divergence pattern; ``lint_target`` exposes the real
-    distributed plan to the catalog-wide lint.
+    q_source_js_divergence pattern.
 
     Two shuffle-width regimes (the clustering loop_partitions lesson): the
     edge BUILD is corpus-scale, so the share-annotated edge table and the
@@ -365,33 +362,24 @@ def q_graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     a narrow temp_conf width — at a corpus-sized width the ~3 stages x K
     rounds each launch a task per mostly-empty partition and task-launch
     overhead dominates."""
-    from ..session import temp_conf
-
-    ew0, nodes0, n = order_graph_tables_cached(spark, sf)
+    ew0, nodes, n = order_graph_tables_cached(spark, sf)
     # co-partitioned loop (r14): ew persisted hash-partitioned by src at the
     # loop width and MATERIALIZED before the loop is planned (a lazy cache
     # plans adaptive-not-final -> unknown partitioning -> a defensive
     # re-exchange of the edge table every round); each round's shuffled-hash
     # join then runs with zero exchange against the groupBy-partitioned
     # ranks, and the build-time-validated n skips the per-call witness scan
-    ew = ew0.repartition(_PR_LOOP_WIDTH, "src").persist()
-    nodes = nodes0.persist()
-    try:
+    ew = ew0.repartition(_PR_LOOP_WIDTH, "src")
+    with pinned(ew, nodes):
         ew.count()  # finalize the cached plan: the loop sees hashpartitioning(src)
         with temp_conf(
             spark, **{"spark.sql.shuffle.partitions": str(_PR_LOOP_WIDTH)}
         ):
             out = _q_graph_pagerank_frame(
-                spark, sf, tables=(ew, nodes), prevalidated_n=n, copartitioned=True
+                spark, sf, tables=(ew, nodes), prevalidated_n=n
             )
             pdf = out.toPandas()  # one row per supplier: 3 scalars
-    finally:
-        ew.unpersist()
-        nodes.unpersist()
     return spark.createDataFrame(pdf, schema=out.schema)
-
-
-q_graph_pagerank.lint_target = _q_graph_pagerank_frame
 
 
 def _pagerank_oracle_sql(iterations: int, damping: float) -> str:
@@ -447,22 +435,18 @@ _PPR_SEGMENT = "BUILDING"
 def _q_graph_ppr_frame(
     spark: SparkSession,
     sf: str,
-    edges: DataFrame | None = None,
-    tables: tuple[DataFrame, DataFrame] | None = None,
-    prevalidated_n: int | None = None,
-    copartitioned: bool = False,
+    tables: tuple[DataFrame, DataFrame],
+    prevalidated_n: int,
 ) -> DataFrame:
-    if edges is None and tables is None:
-        edges = order_graph_edges(spark, sf)
     seeds = (
         spark.read.parquet(f"{sf}/customer.parquet")
         .where(F.col("c_mktsegment") == _PPR_SEGMENT)
         .select((F.col("c_custkey") * 2).alias("node"))
     )
     ranks, n = pagerank(
-        edges, iterations=_PR_ITERATIONS, damping=_PR_DAMPING,
+        None, iterations=_PR_ITERATIONS, damping=_PR_DAMPING,
         tables=tables, seeds=seeds,
-        prevalidated_n=prevalidated_n, copartitioned=copartitioned,
+        prevalidated_n=prevalidated_n, copartitioned=True,
     )
     supplier = spark.read.parquet(f"{sf}/supplier.parquet").select("s_suppkey", "s_name")
     return (
@@ -483,28 +467,17 @@ def q_graph_ppr_segment(spark: SparkSession, sf: str) -> DataFrame:
     centrality). Same persist/materialize/release pattern and unrolled
     5-round plan as q_graph_pagerank; seeds outside the graph are ignored
     by construction."""
-    from ..session import temp_conf
-
-    ew0, nodes0, n = order_graph_tables_cached(spark, sf)
+    ew0, nodes, n = order_graph_tables_cached(spark, sf)
     # same co-partitioned loop + build-time-validated n as q_graph_pagerank
-    ew = ew0.repartition(_PR_LOOP_WIDTH, "src").persist()
-    nodes = nodes0.persist()
-    try:
+    ew = ew0.repartition(_PR_LOOP_WIDTH, "src")
+    with pinned(ew, nodes):
         ew.count()  # finalize the cached plan: the loop sees hashpartitioning(src)
         with temp_conf(
             spark, **{"spark.sql.shuffle.partitions": str(_PR_LOOP_WIDTH)}
         ):
-            out = _q_graph_ppr_frame(
-                spark, sf, tables=(ew, nodes), prevalidated_n=n, copartitioned=True
-            )
+            out = _q_graph_ppr_frame(spark, sf, tables=(ew, nodes), prevalidated_n=n)
             pdf = out.toPandas()  # one row per supplier: 3 scalars
-    finally:
-        ew.unpersist()
-        nodes.unpersist()
     return spark.createDataFrame(pdf, schema=out.schema)
-
-
-q_graph_ppr_segment.lint_target = _q_graph_ppr_frame
 
 
 def _ppr_oracle_sql(iterations: int, damping: float, segment: str) -> str:
@@ -581,8 +554,6 @@ def q_link_graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
 
     Same persist/materialize/release + narrow-loop-width pattern as the
     other graph entries (the page graph is corpus-sized: ~3 links/page)."""
-    from ..session import temp_conf
-
     from .html import documents_as_html, extract_links
 
     pages = documents_as_html(spark, sf, cross_links=True)
@@ -598,13 +569,12 @@ def q_link_graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("w"))
     )
     edges = undirected_edges(pairs, "doc_id", "target", "w")
-    ew0, nodes0 = pagerank_graph_tables(edges)
+    ew0, nodes = pagerank_graph_tables(edges)
     # the symmetrized build is dangling-free by construction, so the node
     # count doubles as prevalidated_n (no witness scan); co-partitioned
     # loop as in q_graph_pagerank (ew materialized pre-planning)
-    ew = ew0.repartition(_PR_LOOP_WIDTH, "src").persist()
-    nodes = nodes0.persist()
-    try:
+    ew = ew0.repartition(_PR_LOOP_WIDTH, "src")
+    with pinned(ew, nodes):
         ew.count()  # the one corpus job: extract links + build + partition
         n = nodes.count()
         with temp_conf(
@@ -619,38 +589,7 @@ def q_link_graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
                 F.round(F.col("rank") * F.lit(float(n)), 4).alias("pr_scaled"),
             ).orderBy("doc_id")
             pdf = out.toPandas()  # one row per page: 2 scalars
-    finally:
-        ew.unpersist()
-        nodes.unpersist()
     return spark.createDataFrame(pdf, schema=out.schema)
-
-
-def _q_link_graph_lint(spark: SparkSession, sf: str) -> DataFrame:
-    from .html import documents_as_html, extract_links
-
-    pages = documents_as_html(spark, sf, cross_links=True)
-    links = extract_links(pages, "html")
-    pairs = (
-        links.select(
-            "doc_id",
-            F.regexp_extract("href", "^/doc/([0-9]+)$", 1).alias("_target"),
-        )
-        .where(F.col("_target") != "")
-        .select("doc_id", F.col("_target").cast("long").alias("target"))
-        .groupBy("doc_id", "target")
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    ranks, n = pagerank(
-        undirected_edges(pairs, "doc_id", "target", "w"),
-        iterations=_PR_ITERATIONS, damping=_PR_DAMPING,
-    )
-    return ranks.select(
-        F.col("node").alias("doc_id"),
-        F.round(F.col("rank") * F.lit(float(n)), 4).alias("pr_scaled"),
-    ).orderBy("doc_id")
-
-
-q_link_graph_pagerank.lint_target = _q_link_graph_lint
 
 
 def _link_pagerank_oracle_sql(iterations: int, damping: float) -> str:
@@ -800,8 +739,6 @@ def q_graph_hits_suppliers(spark: SparkSession, sf: str) -> DataFrame:
 
     Edge build is one fact join + count; the 2K unrolled rounds run over
     the persisted directed edge table under the narrow loop width."""
-    from ..session import temp_conf
-
     orders = spark.read.parquet(f"{sf}/orders.parquet").select("o_orderkey", "o_custkey")
     lineitem = spark.read.parquet(f"{sf}/lineitem.parquet").select("l_orderkey", "l_suppkey")
     edges = (
@@ -813,9 +750,8 @@ def q_graph_hits_suppliers(spark: SparkSession, sf: str) -> DataFrame:
             F.col("l_suppkey").alias("dst"),
             "w",
         )
-        .persist()
     )
-    try:
+    with pinned(edges):
         edges.count()  # materialize at session width (the one corpus job)
         with temp_conf(spark, **{"spark.sql.shuffle.partitions": "8"}):
             # dst-keyed copy for the hub-step joins (see hits() docstring):
@@ -823,52 +759,33 @@ def q_graph_hits_suppliers(spark: SparkSession, sf: str) -> DataFrame:
             # hashpartitioning(dst, 8) — paired with the dst-partitioned
             # auth aggregate, each round's hub join runs exchange- and
             # sort-free where the default plan sort-merge-joined
-            edges_dst = edges.repartition(8, "dst").persist()
-            edges_dst.count()
-            auth, _hub = hits(
-                edges, iterations=_HITS_ITERATIONS, edges_dst=edges_dst
-            )
-            # three actions follow (sum, count, collect): persist the
-            # node-sized result so the 2K-join chain runs once
-            auth = auth.persist()
-            total = auth.agg(F.sum("auth")).collect()[0][0]
-            n = auth.count()
-            supplier = spark.read.parquet(f"{sf}/supplier.parquet").select(
-                "s_suppkey", "s_name"
-            )
-            out = (
-                auth.join(supplier, auth.node == supplier.s_suppkey)
-                .select(
-                    "s_suppkey",
-                    "s_name",
-                    F.round(
-                        F.col("auth") / F.lit(float(total)) * F.lit(float(n)), 4
-                    ).alias("authority"),
+            edges_dst = edges.repartition(8, "dst")
+            with pinned(edges_dst):
+                edges_dst.count()
+                auth, _hub = hits(
+                    edges, iterations=_HITS_ITERATIONS, edges_dst=edges_dst
                 )
-                .orderBy("s_suppkey")
-            )
-            pdf = out.toPandas()  # one row per supplier: 3 scalars
-            auth.unpersist()
-            edges_dst.unpersist()
-    finally:
-        edges.unpersist()
+                # three actions follow (sum, count, collect): persist the
+                # node-sized result so the 2K-join chain runs once
+                with pinned(auth):
+                    total = auth.agg(F.sum("auth")).collect()[0][0]
+                    n = auth.count()
+                    supplier = spark.read.parquet(f"{sf}/supplier.parquet").select(
+                        "s_suppkey", "s_name"
+                    )
+                    out = (
+                        auth.join(supplier, auth.node == supplier.s_suppkey)
+                        .select(
+                            "s_suppkey",
+                            "s_name",
+                            F.round(
+                                F.col("auth") / F.lit(float(total)) * F.lit(float(n)), 4
+                            ).alias("authority"),
+                        )
+                        .orderBy("s_suppkey")
+                    )
+                    pdf = out.toPandas()  # one row per supplier: 3 scalars
     return spark.createDataFrame(pdf, schema=out.schema)
-
-
-def _q_graph_hits_lint(spark: SparkSession, sf: str) -> DataFrame:
-    orders = spark.read.parquet(f"{sf}/orders.parquet").select("o_orderkey", "o_custkey")
-    lineitem = spark.read.parquet(f"{sf}/lineitem.parquet").select("l_orderkey", "l_suppkey")
-    edges = (
-        lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
-        .groupBy("o_custkey", "l_suppkey")
-        .agg(F.count(F.lit(1)).cast("double").alias("w"))
-        .select(F.col("o_custkey").alias("src"), F.col("l_suppkey").alias("dst"), "w")
-    )
-    auth, _ = hits(edges, iterations=_HITS_ITERATIONS)
-    return auth
-
-
-q_graph_hits_suppliers.lint_target = _q_graph_hits_lint
 
 
 def _hits_oracle_sql(iterations: int) -> str:
@@ -1222,8 +1139,6 @@ def kcore_nodes(
     if loop_partitions is None:
         adj = peel(adj)
     else:
-        from ..session import temp_conf
-
         with temp_conf(
             pairs.sparkSession,
             **{"spark.sql.shuffle.partitions": str(loop_partitions)},

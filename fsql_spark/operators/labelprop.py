@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import pinned
 from .sampling import fraction_to_hex_threshold
 from .similarity import ivf_assign
 
@@ -315,12 +316,8 @@ _LP_SEED_FRACTION = 0.3
 _LP_ROUNDS = 2
 
 
-def _q_label_propagation_frame(
-    spark: SparkSession, sf: str, graph: DataFrame | None = None
-) -> DataFrame:
+def _q_label_propagation_frame(spark: SparkSession, sf: str, graph: DataFrame) -> DataFrame:
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    if graph is None:
-        graph = knn_graph(emb, "vec_id", "embedding", k=_LP_K, n_centroids=_LP_CENTROIDS)
     out = propagate_labels(
         emb, graph, "vec_id", "label",
         seed_fraction=_LP_SEED_FRACTION, rounds=_LP_ROUNDS,
@@ -357,21 +354,13 @@ def q_label_propagation(spark: SparkSession, sf: str) -> DataFrame:
 
     The two rounds reference the edge list twice, so it is persisted for
     the call and the node-sized result materialized driver-side so the
-    cache releases per call — the q_source_js_divergence pattern;
-    ``lint_target`` exposes the real distributed plan."""
+    cache releases per call — the q_source_js_divergence pattern."""
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    graph = knn_graph(
-        emb, "vec_id", "embedding", k=_LP_K, n_centroids=_LP_CENTROIDS
-    ).persist()
-    try:
+    graph = knn_graph(emb, "vec_id", "embedding", k=_LP_K, n_centroids=_LP_CENTROIDS)
+    with pinned(graph):
         out = _q_label_propagation_frame(spark, sf, graph=graph)
         pdf = out.toPandas()  # one row per vector: 4 scalars
-    finally:
-        graph.unpersist()
     return spark.createDataFrame(pdf, schema=out.schema)
-
-
-q_label_propagation.lint_target = _q_label_propagation_frame
 
 
 _LP_THRESHOLD_HEX = fraction_to_hex_threshold(_LP_SEED_FRACTION)

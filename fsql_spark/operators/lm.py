@@ -33,6 +33,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import pinned
 from .vocab import term_frequencies, vocabulary
 
 
@@ -80,8 +81,7 @@ def unigram_model(
             )
         else:
             counts = vocabulary(corpus, id_col, text_col)
-    counts = counts.persist()
-    try:
+    with pinned(counts):
         # T and V are model metadata: one aggregate over the token-keyed
         # counts (vocabulary-sized, NOT corpus-sized), two driver scalars.
         tot = counts.agg(
@@ -100,8 +100,6 @@ def unigram_model(
             )
             .collect()
         )
-    finally:
-        counts.unpersist()
     schema = StructType(
         [
             StructField("token", StringType()),
@@ -319,8 +317,8 @@ def bigram_model(
         if pairs is None:
             pairs = _pair_stream(corpus, id_col, text_col)
         pair_counts = pairs.groupBy("prev", "cur").agg(F.count(F.lit(1)).alias("c12"))
-    counts = pair_counts.where(F.col("prev").isNotNull()).persist()
-    try:
+    counts = pair_counts.where(F.col("prev").isNotNull())
+    with pinned(counts):
         ctx = counts.groupBy("prev").agg(F.sum("c12").alias("cctx"))
         rows = (
             counts.orderBy(F.desc("c12"), "prev", "cur")
@@ -336,8 +334,6 @@ def bigram_model(
             )
             .collect()
         )
-    finally:
-        counts.unpersist()
     schema = StructType(
         [
             StructField("prev", StringType()),
@@ -657,8 +653,8 @@ def q_doc_perplexity(spark: SparkSession, sf: str) -> DataFrame:
     # (doc_id < 300), so it is materialized driver-side — exactly like the
     # model itself — which lets the corpus-scale tf cache be RELEASED per
     # call instead of accumulating executor storage across catalog runs.
-    tf = term_frequencies(docs).persist()
-    try:
+    tf = term_frequencies(docs)
+    with pinned(tf):
         model, oov_lp, _, _ = unigram_model(docs, top_k=_TOP_K, tf=tf)
         out = (
             doc_cross_entropy(docs, model, oov_lp, tf=tf)
@@ -673,8 +669,6 @@ def q_doc_perplexity(spark: SparkSession, sf: str) -> DataFrame:
             .orderBy("doc_id")
         )
         pdf = out.toPandas()  # <=300 rows x 5 scalars
-    finally:
-        tf.unpersist()
     return spark.createDataFrame(pdf, schema=out.schema)
 
 
@@ -710,9 +704,9 @@ def q_doc_bigram_perplexity(spark: SparkSession, sf: str) -> DataFrame:
     # by construction. Entry profile: summed job time 2.92 -> 2.36 s (the
     # corpus pass is the single-task tokenize job, now run once not twice);
     # wall at sf0.1 is scheduler-dominated and moves less.
-    pairs = _pair_stream(docs).persist()
-    pc = pairs.groupBy("prev", "cur").agg(F.count(F.lit(1)).alias("c12")).persist()
-    try:
+    pairs = _pair_stream(docs)
+    pc = pairs.groupBy("prev", "cur").agg(F.count(F.lit(1)).alias("c12"))
+    with pinned(pairs, pc):
         uni_counts = pc.groupBy(F.col("cur").alias("token")).agg(
             F.sum("c12").alias("total_tf")
         )
@@ -731,9 +725,6 @@ def q_doc_bigram_perplexity(spark: SparkSession, sf: str) -> DataFrame:
             .orderBy("doc_id")
         )
         pdf = out.toPandas()  # <=300 rows
-    finally:
-        pairs.unpersist()
-        pc.unpersist()
     return spark.createDataFrame(pdf, schema=out.schema)
 
 
@@ -791,51 +782,45 @@ def q_perplexity_buckets(spark: SparkSession, sf: str) -> DataFrame:
     from .sketches import sampled_quantiles
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    # caches release on EVERY path (try/finally — a mid-job failure must not
-    # leave corpus-scale blocks persisted with no handle to free them)
-    tf = term_frequencies(docs).persist()
-    scored = None
-    try:
+    # caches release on EVERY path (a mid-job failure must not leave
+    # corpus-scale blocks persisted with no handle to free them)
+    tf = term_frequencies(docs)
+    with pinned(tf):
         model, oov_lp, _, _ = unigram_model(docs, top_k=_TOP_K, tf=tf)
         # persist the NARROW (doc_id, ce) relation: the threshold sample and
         # the final bucketing both consume it — without this the corpus-scale
         # scoring join would run twice (review find). Two columns per doc, not
         # corpus text; the threshold collect below materializes it.
-        scored = (
-            doc_cross_entropy(docs, model, oov_lp, tf=tf)
-            .select("doc_id", F.round("cross_entropy", 4).alias("ce"))
-            .persist()
+        scored = doc_cross_entropy(docs, model, oov_lp, tf=tf).select(
+            "doc_id", F.round("cross_entropy", 4).alias("ce")
         )
-        th = sampled_quantiles(
-            scored, "ce", "doc_id", fraction=0.5, quantiles=(1 / 3, 2 / 3)
-        ).collect()[0]
-        # the threshold collect above materialized the narrow scored cache;
-        # every later read goes through it, so the corpus-scale tf cache is
-        # now dead weight — release it early (review find)
-        tf.unpersist()
-        t1, t2 = th["q33_ce"], th["q67_ce"]
-        bucket = (
-            F.when(F.col("ce") <= t1, F.lit("head"))
-            .when(F.col("ce") <= t2, F.lit("middle"))
-            .otherwise(F.lit("tail"))
-        )
-        out = (
-            scored.withColumn("bucket", bucket)
-            .groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.round(F.min("ce"), 4).alias("min_ce"),
-                F.round(F.max("ce"), 4).alias("max_ce"),
+        with pinned(scored):
+            th = sampled_quantiles(
+                scored, "ce", "doc_id", fraction=0.5, quantiles=(1 / 3, 2 / 3)
+            ).collect()[0]
+            # the threshold collect above materialized the narrow scored cache;
+            # every later read goes through it, so the corpus-scale tf cache is
+            # now dead weight — release it early (review find)
+            tf.unpersist()
+            t1, t2 = th["q33_ce"], th["q67_ce"]
+            bucket = (
+                F.when(F.col("ce") <= t1, F.lit("head"))
+                .when(F.col("ce") <= t2, F.lit("middle"))
+                .otherwise(F.lit("tail"))
             )
-            .orderBy("bucket")
-        )
-        # 3-row audit: materialize it so the scored cache can release too —
-        # repeated catalog runs must not accumulate per-call executor storage
-        pdf = out.toPandas()
-    finally:
-        tf.unpersist()
-        if scored is not None:
-            scored.unpersist()
+            out = (
+                scored.withColumn("bucket", bucket)
+                .groupBy("bucket")
+                .agg(
+                    F.count(F.lit(1)).alias("n_docs"),
+                    F.round(F.min("ce"), 4).alias("min_ce"),
+                    F.round(F.max("ce"), 4).alias("max_ce"),
+                )
+                .orderBy("bucket")
+            )
+            # 3-row audit: materialize it so the scored cache can release too —
+            # repeated catalog runs must not accumulate per-call executor storage
+            pdf = out.toPandas()
     return spark.createDataFrame(pdf, schema=out.schema)
 
 
@@ -874,53 +859,6 @@ FROM bucketed
 GROUP BY bucket
 ORDER BY bucket
 """
-
-
-# lint_target hooks: the entries above materialize their bounded results
-# driver-side (to release corpus-scale caches per call), so their returned
-# DataFrame is a LocalTableScan — these expose the REAL distributed plans
-# (scoring join, bucket aggregate) for the catalog-wide physical-plan lint.
-
-def _doc_perplexity_lint_plan(spark: SparkSession, sf: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    model, oov_lp, _, _ = unigram_model(docs, top_k=_TOP_K)
-    return (
-        doc_cross_entropy(docs, model, oov_lp)
-        .where(F.col("doc_id") < 300)
-        .select("doc_id", "n_tokens", "n_oov", "cross_entropy", "perplexity")
-    )
-
-
-def _perplexity_buckets_lint_plan(spark: SparkSession, sf: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    model, oov_lp, _, _ = unigram_model(docs, top_k=_TOP_K)
-    scored = doc_cross_entropy(docs, model, oov_lp).select(
-        "doc_id", F.round("cross_entropy", 4).alias("ce")
-    )
-    # fixed thresholds: the lint checks plan SHAPE; the entry's real
-    # thresholds come from a driver collect that cannot ride a lazy plan
-    bucket = (
-        F.when(F.col("ce") <= 3.0, F.lit("head"))
-        .when(F.col("ce") <= 4.0, F.lit("middle"))
-        .otherwise(F.lit("tail"))
-    )
-    return (
-        scored.withColumn("bucket", bucket)
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-
-
-def _doc_bigram_perplexity_lint_plan(spark: SparkSession, sf: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    uni, oov_lp, _, vocab_size = unigram_model(docs, top_k=_TOP_K)
-    bi = bigram_model(docs, vocab_size, top_k=_TOP_B)
-    return doc_bigram_cross_entropy(docs, uni, oov_lp, bi).where(F.col("doc_id") < 300)
-
-
-q_doc_perplexity.lint_target = _doc_perplexity_lint_plan
-q_perplexity_buckets.lint_target = _perplexity_buckets_lint_plan
-q_doc_bigram_perplexity.lint_target = _doc_bigram_perplexity_lint_plan
 
 
 LM_QUERIES = {

@@ -42,6 +42,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import pinned
 from .vocab import term_frequencies
 
 
@@ -151,7 +152,7 @@ def source_js_divergence(
 _TOP_K = 50
 
 
-def _q_source_js_frame(spark: SparkSession, sf: str, counts: DataFrame | None = None) -> DataFrame:
+def _q_source_js_frame(spark: SparkSession, sf: str, counts: DataFrame) -> DataFrame:
     docs = spark.read.parquet(f"{sf}/documents.parquet")
     return (
         source_js_divergence(docs, group_col="source", top_k=_TOP_K, counts=counts)
@@ -184,10 +185,10 @@ def q_source_js_divergence(spark: SparkSession, sf: str) -> DataFrame:
     The small cache lives as long as the returned DataFrame (the
     dedup_incremental_bloom precedent — the result depends on it); a
     session looping over many corpora should ``clearCache()`` between
-    them. ``lint_target`` exposes the distributed plan to the lint."""
+    them."""
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    counts = group_token_counts(docs, "source").persist()
-    try:
+    counts = group_token_counts(docs, "source")
+    with pinned(counts):
         vocab = (
             counts.groupBy("token")
             .agg(F.sum("tf").alias("total_tf"))
@@ -199,12 +200,7 @@ def q_source_js_divergence(spark: SparkSession, sf: str) -> DataFrame:
         # of this metadata-sized side trivial
         kept = counts.join(F.broadcast(vocab), "token").coalesce(1).persist()
         kept.count()  # materialize before releasing the corpus cache
-    finally:
-        counts.unpersist()
     return _q_source_js_frame(spark, sf, counts=kept)
-
-
-q_source_js_divergence.lint_target = _q_source_js_frame
 
 
 Q_SOURCE_JS_SQL = f"""
@@ -322,41 +318,28 @@ def zipf_slopes(counts: DataFrame, group_col: str = "source") -> DataFrame:
     )
 
 
-def _q_keyness_frame(
-    spark: SparkSession, sf: str, counts: DataFrame | None = None
-) -> DataFrame:
-    from pyspark.sql import Window
-
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    counts = counts if counts is not None else group_token_counts(docs, "source")
-    total = counts.agg(F.sum("tf")).collect()[0][0]
-    scored = keyness_terms(counts, total, "source")
-    w = Window.partitionBy("source").orderBy(F.desc("g2"), "token")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 3)
-        .select("source", "token", "tf", F.round("g2", 4).alias("g2"), "rnk")
-        .orderBy("source", "rnk")
-    )
-
-
 def q_keyness_terms(spark: SparkSession, sf: str) -> DataFrame:
     """Top-3 Dunning-G2 keywords per source vs the rest of the corpus —
     the domain-characterization report. The count stream feeds both the
     scalar total and the scoring join, so it is persisted for the call
     (the q_source_js_divergence pattern); the result is sources x 3 rows,
     materialized driver-side to release the cache."""
+    from pyspark.sql import Window
+
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    counts = group_token_counts(docs, "source").persist()
-    try:
-        out = _q_keyness_frame(spark, sf, counts=counts)
+    counts = group_token_counts(docs, "source")
+    with pinned(counts):
+        total = counts.agg(F.sum("tf")).collect()[0][0]
+        scored = keyness_terms(counts, total, "source")
+        w = Window.partitionBy("source").orderBy(F.desc("g2"), "token")
+        out = (
+            scored.withColumn("rnk", F.row_number().over(w))
+            .where(F.col("rnk") <= 3)
+            .select("source", "token", "tf", F.round("g2", 4).alias("g2"), "rnk")
+            .orderBy("source", "rnk")
+        )
         pdf = out.toPandas()  # sources x 3 rows of 5 scalars
-    finally:
-        counts.unpersist()
     return spark.createDataFrame(pdf, schema=out.schema)
-
-
-q_keyness_terms.lint_target = _q_keyness_frame
 
 
 Q_KEYNESS_SQL = """

@@ -36,6 +36,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import pinned
+
 #: canonical multimodal record: opaque payload + typed metadata
 MEDIA_SCHEMA = StructType(
     [
@@ -2173,16 +2175,6 @@ def video_augment_checksums_fused(
     return _spread_for_kernel(docs.select("doc_id", "text")).mapInPandas(kernel, schema)
 
 
-def _q_video_augment_frame(spark: SparkSession, sf: str) -> DataFrame:
-    """The real distributed plan of :func:`q_video_augment` (pre-
-    materialization) — the ``lint_target`` hook, so the catalog-wide plan
-    lint inspects the fused decode/augment/encode chain instead of the
-    LocalTableScan the entry returns (advice find: the entry declared no
-    lint_target and the lint went blind on it)."""
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    return video_augment_checksums_fused(docs).orderBy("media_id", "op")
-
-
 def q_video_augment(spark: SparkSession, sf: str) -> DataFrame:
     """Decode -> {reverse, stride-2, trim-half} -> re-encode Y4M -> decode
     again, audited by time-weighted luma checksums (per-frame sums are
@@ -2198,16 +2190,11 @@ def q_video_augment(spark: SparkSession, sf: str) -> DataFrame:
     # checksum table (3 rows x 4 scalars per video) so sample + sort share
     # ONE kernel pass, and release the cache via the driver-side
     # materialization pattern (q_doc_perplexity).
-    pre = video_augment_checksums_fused(docs).persist()
-    try:
+    pre = video_augment_checksums_fused(docs)
+    with pinned(pre):
         out = pre.orderBy("media_id", "op")
         pdf = out.toPandas()
-    finally:
-        pre.unpersist()
     return spark.createDataFrame(pdf, schema=out.schema)
-
-
-q_video_augment.lint_target = _q_video_augment_frame
 
 
 # source model (pack_y4m 8x8): frame p (1-based char) has luma sum 64*ascii
@@ -2242,17 +2229,6 @@ ORDER BY media_id, op
 """
 
 
-def _q_image_augment_frame(spark: SparkSession, sf: str) -> DataFrame:
-    """The real distributed plan of :func:`q_image_augment` (pre-
-    materialization) — the ``lint_target`` hook (see
-    :func:`_q_video_augment_frame`)."""
-    media = documents_as_png(spark, sf, width=32)
-    aug = augment_images(media)
-    return image_position_checksums(aug, carry_cols=("op",)).select(
-        "media_id", "op", "width", "height", "pos_checksum"
-    ).orderBy("media_id", "op")
-
-
 def q_image_augment(spark: SparkSession, sf: str) -> DataFrame:
     """Decode -> {hflip, vflip, rot180, center-crop} -> re-encode -> decode
     again, audited by position-weighted checksums: the full distributed
@@ -2266,16 +2242,11 @@ def q_image_augment(spark: SparkSession, sf: str) -> DataFrame:
     # sampling job and the sort itself share ONE augment+decode pass
     pre = image_position_checksums(aug, carry_cols=("op",)).select(
         "media_id", "op", "width", "height", "pos_checksum"
-    ).persist()
-    try:
+    )
+    with pinned(pre):
         out = pre.orderBy("media_id", "op")
         pdf = out.toPandas()
-    finally:
-        pre.unpersist()
     return spark.createDataFrame(pdf, schema=out.schema)
-
-
-q_image_augment.lint_target = _q_image_augment_frame
 
 
 # the oracle recomputes each op's output pixel at (r, c) from its SOURCE

@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from ..session import pinned
+
 PHASH_SCHEMA = StructType(
     [StructField("media_id", LongType()), StructField("phash", StringType())]
 )
@@ -244,16 +246,6 @@ ORDER BY media_id
 """
 
 
-def _q_phash_near_frame(
-    spark: SparkSession, sf: str, hashes: DataFrame | None = None
-) -> DataFrame:
-    from .multimodal import documents_as_png
-
-    if hashes is None:
-        hashes = perceptual_hashes(documents_as_png(spark, sf, width=32), hash_size=8)
-    return phash_near_pairs(hashes, n_bands=4, max_hamming=6).orderBy("id_a", "id_b")
-
-
 def q_image_phash_near_dups(spark: SparkSession, sf: str) -> DataFrame:
     """Near-miss DISTINCT-hash pairs (exact-collapse, then banded Hamming
     LSH over aHash: 4 bands of 16 bits, exact verify at distance <= 6) —
@@ -264,26 +256,19 @@ def q_image_phash_near_dups(spark: SparkSession, sf: str) -> DataFrame:
     The band self-join references the hash frame on both sides, so the
     decode-bearing hash computation is persisted per call and the
     pairs-sized result materialized driver-side (the q_doc_perplexity
-    cache-release pattern; ``lint_target`` exposes the distributed plan)."""
+    cache-release pattern)."""
     from .multimodal import documents_as_png
 
-    hashes = perceptual_hashes(
-        documents_as_png(spark, sf, width=32), hash_size=8
-    ).persist()
-    try:
+    hashes = perceptual_hashes(documents_as_png(spark, sf, width=32), hash_size=8)
+    with pinned(hashes):
         # materialize BEFORE planning the self-join: AQE submits both band
         # join sides' map stages concurrently, and two racing cache-miss
         # scans each run the full render+decode (profiler: two parallel
         # 0.67s 32-task jobs instead of one build + cheap cache reads)
         hashes.count()
-        out = _q_phash_near_frame(spark, sf, hashes=hashes)
+        out = phash_near_pairs(hashes, n_bands=4, max_hamming=6).orderBy("id_a", "id_b")
         pdf = out.toPandas()  # near-pair rows: 3 scalars each, LSH-bounded
-    finally:
-        hashes.unpersist()
     return spark.createDataFrame(pdf, schema=out.schema)
-
-
-q_image_phash_near_dups.lint_target = _q_phash_near_frame
 
 
 Q_IMAGE_PHASH_NEAR_SQL = """

@@ -96,8 +96,9 @@ def _fix_nanos(spark: SparkSession, sf_dir: str, pin_tz: bool = True) -> DataFra
     executors, timeZone by timestamp_micros/NTZ-cast/window alignment — so
     restoring them before the caller materializes the returned (lazy)
     DataFrame would break the read. nanosAsLong only affects TIMESTAMP(NANOS)
-    files, which stock Spark cannot read at all; the UTC pin is the engine's
-    documented session contract (session.SPARK_DEFAULTS). ``pin_tz=False``
+    files, which stock Spark cannot read at all; both values are in
+    session.SPARK_DEFAULTS (the engine's documented session contract), so on
+    a configured session these sets change nothing. ``pin_tz=False``
     (used by the generic ``sql()`` table registration) skips the TZ pin so
     registering the events view does not change the caller's session-wide
     timestamp behavior — their windows then align to their OWN session TZ."""

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Defaults applied by :func:`get_spark`. Callers that bring their own session
 #: (e.g. the driver harness) can apply them with :func:`configure`.
@@ -43,6 +43,9 @@ SPARK_DEFAULTS: dict[str, str] = {
     # sweep. 64 MB keeps per-task buffers bounded no matter how wide rows
     # get; small text rows still close on the 10k-record default first.
     "spark.sql.execution.arrow.maxBytesPerBatch": "67108864",
+    # the events loaders read TIMESTAMP(NANOS) parquet as longs; they set
+    # this themselves on sessions nobody configured
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
 
@@ -103,25 +106,34 @@ def temp_conf(spark: SparkSession, **confs: str):
     schema inference, which runs at ``load()`` time) — execution-time confs
     (captured when an action runs) must NOT be restored early. Dotted conf
     keys are passed via ``temp_conf(spark, **{"spark.sql....": "false"})``.
+    A key nobody had set is unset again afterwards, not pinned to its
+    default.
     """
-    saved: dict[str, str | None] = {}
+    saved = {key: spark.conf.get(key, None) for key in confs}
     for key, val in confs.items():
-        try:
-            saved[key] = spark.conf.get(key)
-        except Exception:
-            saved[key] = None
         spark.conf.set(key, val)
     try:
         yield
     finally:
         for key, old in saved.items():
             if old is None:
-                try:
-                    spark.conf.unset(key)
-                except Exception:
-                    pass
+                spark.conf.unset(key)
             else:
                 spark.conf.set(key, old)
+
+
+@contextmanager
+def pinned(*dfs: DataFrame):
+    """Persist ``dfs`` (default storage level) for the block and unpersist
+    them on every exit path. Persisting is lazy: the caller decides when a
+    cache materializes."""
+    for df in dfs:
+        df.persist()
+    try:
+        yield
+    finally:
+        for df in dfs:
+            df.unpersist()
 
 
 def configure(spark: SparkSession) -> SparkSession:

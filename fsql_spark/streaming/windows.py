@@ -34,6 +34,8 @@ from pyspark.sql.types import (
     StringType,
 )
 
+from ..session import temp_conf
+
 # Stream schema for tests that stage their own legacy TIMESTAMP(NANOS)
 # parquet (read as long under the nanosAsLong conf). The production
 # ``events_stream`` source no longer hardcodes this — it derives the schema
@@ -330,18 +332,11 @@ def run_to_memory(
                 f"state_partitions={existing} explicitly, or start a new "
                 "checkpoint to re-partition state."
             )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        prev_ndb = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    except Exception:
-        prev_ndb = "true"
+    confs = {"spark.sql.shuffle.partitions": str(state_partitions)}
+    if skip_final_batch:
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
     name = f"stream_result_{uuid.uuid4().hex[:12]}"
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        if skip_final_batch:
-            spark.conf.set(
-                "spark.sql.streaming.noDataMicroBatches.enabled", "false"
-            )
+    with temp_conf(spark, **confs):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)
@@ -354,9 +349,6 @@ def run_to_memory(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_ndb)
     return spark.table(name)
 
 

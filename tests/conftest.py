@@ -19,6 +19,13 @@ def spark():
     yield s
 
 
+@pytest.fixture(scope="session")
+def entry_runs():
+    """``driver_mimic.EntryRun`` of each catalog entry, by name: filled by
+    the oracle-parity test, read by the plan-lint and hygiene tests."""
+    return {}
+
+
 # the reference's recurring example frames (`tests/test_example_usage.py:10-12`)
 @pytest.fixture()
 def df1():

@@ -5,11 +5,17 @@ tolerance beyond canonical repr). Used by tests/test_oracle_strict.py and
 runnable standalone:
 
     python tests/driver_mimic.py sf_dir q9_product_profit q12_...
+
+Also the executed-plan reader (:func:`entry_run`): the plans of every SQL
+execution an entry started, read back from Spark's SQL status store, linted
+for scale-killer nodes, plus what the entry left behind in the session.
 """
 
 from __future__ import annotations
 
 import hashlib
+from contextlib import contextmanager
+from dataclasses import dataclass, field
 
 import duckdb
 import pandas as pd
@@ -99,6 +105,101 @@ def compare(name: str, spark, sf_dir: str, con=None) -> dict:
     finally:
         if own_con:
             con.close()
+
+
+# --- executed plans and session hygiene ------------------------------------
+
+#: Scale-killer nodes no executed plan may contain:
+#: - ``CartesianProduct``: an unkeyed join, quadratic in data volume;
+#: - ``BroadcastNestedLoopJoin``: the non-equi fallback, quadratic per
+#:   broadcast batch;
+#: - ``BatchEvalPython``: a row-at-a-time Python UDF (only Arrow-batched
+#:   ``ArrowEvalPython``/``MapInPandas`` are acceptable Python).
+FORBIDDEN = ("CartesianProduct", "BroadcastNestedLoopJoin", "BatchEvalPython")
+
+
+@dataclass
+class EntryRun:
+    """What one entry did: the final physical plan of every SQL execution it
+    started (with the execution's description), and what it left behind."""
+
+    executions: list[tuple[str, str]] = field(default_factory=list)
+    leaks: list[str] = field(default_factory=list)
+
+    def scale_killers(self) -> list[str]:
+        return sorted({m for _, plan in self.executions for m in FORBIDDEN if m in plan})
+
+
+def _executions(spark):
+    """SQL executions in the status store, newest first."""
+    return spark._jsparkSession.sharedState().statusStore().executionsList().reverseIterator()
+
+
+def _last_execution_id(spark) -> int:
+    it = _executions(spark)
+    return it.next().executionId() if it.hasNext() else -1
+
+
+def _executions_after(spark, mark: int) -> list[tuple[str, str]]:
+    out = []
+    it = _executions(spark)
+    while it.hasNext():
+        ex = it.next()
+        if ex.executionId() <= mark:
+            break
+        out.append((ex.description(), ex.physicalPlanDescription()))
+    return out[::-1]
+
+
+def _leaks_reset(spark, conf_before: dict[str, str]) -> list[str]:
+    """Name the persisted RDDs, cached plans and conf changes left in the
+    session, then undo them all."""
+    leaks = []
+    rdds = list(spark.sparkContext._jsc.getPersistentRDDs().values())
+    if rdds:
+        leaks.append(f"{len(rdds)} persisted RDD(s)")
+    if not spark._jsparkSession.sharedState().cacheManager().isEmpty():
+        leaks.append("cached plans")
+    spark.catalog.clearCache()
+    for rdd in rdds:
+        rdd.unpersist(True)
+    conf = dict(spark.conf.getAll)
+    for key in sorted(set(conf) | set(conf_before)):
+        if conf.get(key) == conf_before.get(key):
+            continue
+        leaks.append(f"conf {key}: {conf_before.get(key)!r} -> {conf.get(key)!r}")
+        if key in conf_before:
+            spark.conf.set(key, conf_before[key])
+        else:
+            spark.conf.unset(key)
+    return leaks
+
+
+@contextmanager
+def entry_run(spark):
+    """Record the block as one entry run: on exit (also on error) the
+    returned :class:`EntryRun` holds the executed plans of every SQL
+    execution started inside the block and the session state it left
+    behind, and that state is reset so the next entry starts clean."""
+    run = EntryRun()
+    conf_before = dict(spark.conf.getAll)
+    _leaks_reset(spark, conf_before)  # what earlier code left is not this entry's
+    mark = _last_execution_id(spark)
+    try:
+        yield run
+    finally:
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        run.executions = _executions_after(spark, mark)
+        run.leaks = _leaks_reset(spark, conf_before)
+
+
+def run_entry(spark, name: str, sf_dir: str) -> EntryRun:
+    """Run and collect one ``queries()`` entry under :func:`entry_run`."""
+    import __spark_entry__ as entry_mod
+
+    with entry_run(spark) as run:
+        entry_mod.queries()[name](spark, sf_dir).toPandas()
+    return run
 
 
 if __name__ == "__main__":

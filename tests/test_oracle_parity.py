@@ -1,7 +1,11 @@
 """Local twin of the driver's correctness gate: run every ``queries()`` entry
 on Spark and its ``oracle_sql()`` on DuckDB over the same parquet, compare
 row counts + order-insensitive values. Runs at sf0.001 for speed (the driver
-uses sf0.01)."""
+uses sf0.01).
+
+Each entry runs under ``driver_mimic.entry_run``: the plans Catalyst actually
+executed for it are linted for scale-killer nodes, and what it left in the
+session (persisted data, changed confs) is recorded, then reset."""
 
 from __future__ import annotations
 
@@ -12,6 +16,7 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as entry_mod
+from tests.driver_mimic import entry_run, run_entry
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = [
@@ -76,16 +81,39 @@ ORACLES = entry_mod.oracle_sql()
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_matches_oracle(name, spark, duck):
-    fn = QUERIES[name]
-    df = fn(spark, SF_DIR)
-    sql = ORACLES.get(name)
-    if sql is None:
-        # rows-only contract: must run and have a stable schema
-        assert df.count() >= 0
-        assert df.columns
-        return
-    assert_matches(name, df, duck.execute(sql).df())
+def test_query_matches_oracle(name, spark, duck, entry_runs):
+    with entry_run(spark) as entry_runs[name]:
+        df = QUERIES[name](spark, SF_DIR)
+        sql = ORACLES.get(name)
+        if sql is None:
+            # rows-only contract: must run and have a stable schema
+            assert df.count() >= 0
+            assert df.columns
+        else:
+            assert_matches(name, df, duck.execute(sql).df())
+    killers = entry_runs[name].scale_killers()
+    assert not killers, f"{name}: an executed plan contains {killers}"
+
+
+# Entries that leave persisted data behind (operator-level leaks). Strict:
+# fixing one fails its xfail until the name is dropped here.
+LEAKERS = {
+    "q_bpe_tokenized_lengths", "q_corpus_pipeline_v2", "q_dedup_incremental_bloom",
+    "q_graph_kcore", "q_link_graph_components", "q_minhash_incremental",
+    "q_pack_token_shards", "q_pmi_collocations", "q_simhash_collapsed",
+    "q_simhash_near_dups", "q_source_js_divergence", "q_stream_ingest_dedup",
+    "q_tfidf_terms",
+}
+
+
+@pytest.mark.parametrize("name", [
+    pytest.param(n, marks=pytest.mark.xfail(strict=True, reason="leaves persisted data"))
+    if n in LEAKERS else n
+    for n in sorted(QUERIES)
+])
+def test_entry_leaves_session_clean(name, spark, entry_runs):
+    run = entry_runs.get(name) or run_entry(spark, name, SF_DIR)
+    assert not run.leaks, f"{name} left behind: {run.leaks}"
 
 
 def test_entry_smoke(spark):

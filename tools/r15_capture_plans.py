@@ -1,19 +1,18 @@
 #!/usr/bin/env python
-"""Round-14 optimization: capture ``explain('formatted')`` for every declared
-catalog entry at the bench scale factor, plus a machine-readable plan-shape
-summary (Exchange count, join strategies, Python-eval nodes, pushed filters).
+"""Capture the plans every declared catalog entry actually executed: each
+entry runs and collects once, and the final physical plan of every SQL
+execution it started is read back from Spark's SQL status store
+(``tests/driver_mimic.run_entry``), plus a machine-readable plan-shape
+summary summed over those executions (Exchange count, join strategies,
+Python-eval nodes, pushed filters).
 
 Usage:
     python tools/r15_capture_plans.py [--suffix before|after] [--only name ...]
 
-Writes ``plans/r15/<query>_<suffix>.txt`` and a one-line-per-entry JSONL
-summary ``plans/r15/_summary_<suffix>.jsonl`` used to triage optimization
-targets (guide §1: measure first, read the plan).
-
-Streaming entries execute a bounded availableNow stream inside the callable
-and return a finished result frame; their "plan" is the sink-read plan, so
-the interesting shape lives in the batch twin — they are captured anyway for
-completeness, flagged ``streaming: true``.
+Writes ``plans/r15/<query>_<suffix>.txt`` (every executed plan, headed by
+its execution description) and a one-line-per-entry JSONL summary
+``plans/r15/_summary_<suffix>.jsonl`` used to triage optimization targets
+(guide §1: measure first, read the plan).
 """
 
 from __future__ import annotations
@@ -75,40 +74,35 @@ def main() -> None:
                       shuffle_partitions=int(cpus) if cpus.isdigit() else 32)
     spark.sparkContext.setLogLevel("ERROR")
 
-    qs = entry_mod.queries()
-    names = args.only if args.only else sorted(qs)
+    from tests.driver_mimic import run_entry
+
+    names = args.only if args.only else sorted(entry_mod.queries())
     summary_path = os.path.join(args.out_dir, f"_summary_{args.suffix}.jsonl")
     n_err = 0
     with open(summary_path, "w") as sf:
         for i, name in enumerate(names):
-            fn = qs[name]
-            target = getattr(fn, "lint_target", fn)
-            is_streaming = name.startswith("q_stream")
             t0 = time.time()
             try:
-                spark.sparkContext.setJobDescription(f"plan-capture:{name}")
-                df = target(spark, args.sf_dir)
-                plan = df._sc._jvm.PythonSQLUtils.explainString(
-                    df._jdf.queryExecution(), "formatted"
-                )
+                run = run_entry(spark, name, args.sf_dir)
             except Exception:
                 n_err += 1
                 err = traceback.format_exc(limit=5)
                 with open(os.path.join(args.out_dir, f"{name}_{args.suffix}.txt"), "w") as f:
-                    f.write(f"ERROR capturing plan:\n{err}")
+                    f.write(f"ERROR running entry:\n{err}")
                 sf.write(json.dumps({"name": name, "error": err.splitlines()[-1]}) + "\n")
                 print(f"[{i+1}/{len(names)}] {name}: ERROR", file=sys.stderr)
                 continue
-            finally:
-                spark.sparkContext.setJobDescription(None)
             dt = time.time() - t0
             with open(os.path.join(args.out_dir, f"{name}_{args.suffix}.txt"), "w") as f:
-                f.write(plan)
-            row = {"name": name, "capture_sec": round(dt, 2),
-                   "streaming": is_streaming, **plan_stats(plan)}
+                for desc, plan in run.executions:
+                    f.write(f"=== execution: {desc}\n{plan}\n")
+            stats = [plan_stats(plan) for _, plan in run.executions]
+            totals = {k: sum(st[k] for st in stats) for k in (stats[0] if stats else {})}
+            row = {"name": name, "run_sec": round(dt, 2), "executions": len(stats),
+                   "scale_killers": run.scale_killers(), "leaks": run.leaks, **totals}
             sf.write(json.dumps(row) + "\n")
             sf.flush()
-            print(f"[{i+1}/{len(names)}] {name}: {dt:.1f}s ex={row['exchange_total']}")
+            print(f"[{i+1}/{len(names)}] {name}: {dt:.1f}s executions={len(stats)}")
     print(f"done: {len(names)} entries, {n_err} errors -> {summary_path}")
 
 
